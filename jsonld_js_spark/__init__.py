@@ -15,9 +15,10 @@ Layout
                 similarity search, text analysis.
 - ``sources``   readers/writers: transcript synthesizer, N-Quads IO,
                 format registry.
-- ``functions`` column-level helpers built on pyspark.sql.functions.
 - ``plans``     lineage / checkpoint-manifest / resume support.
 - ``streaming`` incremental (snapshot-based) ingest.
+- ``session``   the SparkSession builder; ``daemon`` is the Python
+                worker daemon its sessions run.
 
 This is NOT a port of jsonld.js: the reference is a single-process
 recursive JSON processor; here documents stay inside Arrow record

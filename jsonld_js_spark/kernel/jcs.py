@@ -15,6 +15,12 @@ from __future__ import annotations
 
 import math
 
+
+class NonFiniteNumberError(ValueError):
+    """NaN or +-Infinity in a value to canonicalize: RFC 8785 has no
+    form for them, and the reference's ``canonicalize`` throws too."""
+
+
 _ESCAPES = {
     "\b": "\\b",
     "\t": "\\t",
@@ -55,9 +61,9 @@ def _fmt_number(v) -> str:
             # ±Infinity, which the next line refuses exactly like the
             # reference's canonicalize does (verified live) — it must
             # not surface as a bare OverflowError. (r6 fuzz find)
-            raise ValueError("NaN/Infinity not allowed in JCS") from None
+            raise NonFiniteNumberError("NaN/Infinity not allowed in JCS") from None
     if math.isnan(v) or math.isinf(v):
-        raise ValueError("NaN/Infinity not allowed in JCS")
+        raise NonFiniteNumberError("NaN/Infinity not allowed in JCS")
     if v == 0:
         return "0"
     r = repr(v)

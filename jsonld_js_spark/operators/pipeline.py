@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from ..kernel.api import expand as k_expand
 from ..kernel.canon import PoisonedDatasetError, canonical_id_map, relabel_quads
 from ..kernel.errors import JsonLdError
+from ..kernel.jcs import NonFiniteNumberError
 from ..kernel.nodemap import IdentifierIssuer
 from ..kernel.tordf import quads_to_rows, to_rdf as k_to_rdf
 from ..sources.transcripts import TOOL_CONTEXT, TRANSCRIPT_CONTEXT, turn_subject
@@ -189,7 +190,9 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
         if canonicalize:
             try:
                 id_map = canonical_id_map(
-                    quads, max_work_factor=opts.get("maxWorkFactor", 3))
+                    quads, max_work_factor=opts.get("maxWorkFactor", 3),
+                    message_digest_algorithm=opts.get(
+                        "messageDigestAlgorithm", "sha256"))
             except PoisonedDatasetError as e:
                 events.append({"code": "canonicalization work factor exceeded",
                                "level": "warning", "message": str(e)})
@@ -213,14 +216,14 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
                        "message": "document nesting exceeds the "
                                   "processing depth limit"})
         return [], events
-    except ValueError as e:
-        # same resilience contract for the one ValueError reachable
-        # from document content on this path: RFC 8785 refuses
-        # NaN/Infinity in rdf:JSON literals (kernel/jcs.py — the
-        # reference's canonicalize throws identically), and Python's
-        # json.loads, unlike JSON.parse, ACCEPTS those tokens — so a
-        # single {"@type": "@json"} value holding NaN must degrade to
-        # a per-document error row, not a task-kill-retry storm.
+    except NonFiniteNumberError as e:
+        # same resilience contract for document content that RFC 8785
+        # refuses: NaN/Infinity in an rdf:JSON literal (an over-range
+        # number Number-converts to Infinity; the reference's
+        # canonicalize throws identically) degrades to a per-document
+        # error row, not a task-kill-retry storm. Any other ValueError
+        # here is configuration (e.g. an unsupported
+        # messageDigestAlgorithm) and must fail the job loudly.
         events.append({"code": "invalid JSON literal",
                        "level": "error", "message": str(e)})
         return [], events
@@ -297,19 +300,22 @@ _RDF_JSON = "http://www.w3.org/1999/02/22-rdf-syntax-ns#JSON"
 # JVM twin of looks_like_jsonld(): shape check + Jackson parse probe
 _JSONLD_SHAPE = r'^\s*[\[{]'
 
-# JCS-safe flat tool payload: the exact textual form
+# JCS-safe flat tool payload: the textual layout
 # json.dumps({"name": ..., "args": {...}}, sort_keys=True) emits for a
 # flat string->string args object, restricted to characters that
 # serialize identically under JSON and RFC 8785 (printable ASCII minus
-# '"', '\\', '{', '}').  For a payload matching this grammar the
+# '"', '\\', '{', '}').  The grammar does not check the order or the
+# uniqueness of the args keys: unsorted and duplicate-key payloads
+# match it too, and _tool_fast_cols reproduces them (array_sort and
+# the exists-later filter).  For a payload matching this grammar the
 # kernel's expand->toRDF output is exactly two extra triples beyond the
 # envelope — the invokes IRI and an rdf:JSON literal whose value is the
 # JCS of args — both reproducible in pure column algebra.  Anything
-# else (numbers, booleans, nesting, escapes, non-ASCII, unsorted or
-# duplicate keys, other spacings, a missing member) still routes to the
-# Python kernel, so the fast path can never diverge: it only accepts
-# inputs whose kernel output it provably reproduces byte-for-byte
-# (parity battery: tests/test_hybrid.py).
+# else (numbers, booleans, nesting, escapes, non-ASCII, other
+# spacings, a missing member) still routes to the Python kernel, so
+# the fast path can never diverge: it only accepts inputs whose kernel
+# output it provably reproduces byte-for-byte (parity battery:
+# tests/test_hybrid.py).
 _TOOL_SAFE = r' !#-\[\]-z|~'
 _TOOL_SIMPLE_RE = (
     r'^\{"args": \{(("[%(c)s]*": "[%(c)s]*")(, "[%(c)s]*": "[%(c)s]*")*)?\}, '
@@ -330,8 +336,9 @@ def _tool_fast_cols():
     json.loads keeps the LAST of duplicate keys and RFC 8785 sorts
     members by UTF-16 code units — mirrored here by the exists-later
     filter and array_sort (binary order == code-unit order on the
-    ASCII-only grammar), so ANY rlike-accepted payload is reproduced
-    byte-for-byte (battery: tests/test_hybrid.py)."""
+    ASCII-only grammar), so ANY rlike-accepted payload, unsorted and
+    duplicate-key ones included, is reproduced byte-for-byte (battery:
+    tests/test_hybrid.py)."""
     tool = F.col("tool")
     simple = tool.rlike(_TOOL_SIMPLE_RE)
     args_str = F.regexp_extract(tool, r'^\{"args": (\{[^{}]*\}), "name"', 1)

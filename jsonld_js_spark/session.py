@@ -12,6 +12,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# import root of this package: a directory, or the --py-files zip
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def build_session(app_name: str = "jsonld_js_spark", *, cores: int | None = None,
                   shuffle_partitions: int | None = None,
@@ -32,6 +35,11 @@ def build_session(app_name: str = "jsonld_js_spark", *, cores: int | None = None
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # skips PySpark's per-task zip re-read on CPython < 3.12; the
+        # daemon starts before any task ships --py-files, so the
+        # workers' path must hold this package from the start
+        .config("spark.python.daemon.module", "jsonld_js_spark.daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

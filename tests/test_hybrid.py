@@ -76,8 +76,12 @@ def test_hybrid_matches_kernel_on_tool_payload_battery(spark):
         '{"args": {"q": "esc \\" quote"}, "name": "escaped"}',
         '{"args": {"q": "back \\\\ slash"}, "name": "bslash"}',
         '{"args": {"q": "unicode ü"}, "name": "nonascii"}',
+        # routable after all: the grammar checks neither key order nor
+        # uniqueness, and the JVM branch reproduces these two with
+        # array_sort and the exists-later filter
         '{"args": {"b": "x", "a": "y"}, "name": "unsorted"}',
         '{"args": {"a": "x", "a": "y"}, "name": "dupkey"}',
+        # unroutable again
         '{"name": "argsless"}',
         '{"args": {"q": "x"}}',
         '{"args":{"q":"x"},"name":"tight-spacing"}',

@@ -125,6 +125,24 @@ def test_huge_numbers_from_text_degrade_like_reference():
     assert got == [] and codes == ["invalid JSON literal"]
 
 
+def test_only_nonfinite_json_literals_degrade_at_extraction():
+    """turn_to_quads turns RFC 8785's NaN/Infinity refusal (document
+    content, a NonFiniteNumberError) into an 'invalid JSON literal'
+    row (end to end: test_huge_numbers_from_text_degrade_like_reference);
+    any other ValueError is configuration and must propagate, e.g. an
+    unsupported messageDigestAlgorithm, which must not become a warning
+    row per document."""
+    from jsonld_js_spark.kernel.jcs import NonFiniteNumberError
+    from jsonld_js_spark.operators.pipeline import turn_to_quads
+
+    with pytest.raises(NonFiniteNumberError):
+        canonicalize({"a": float("nan")})
+    doc = '{"@id": "http://x#s", "http://x#p": {"http://x#q": "v"}}'
+    with pytest.raises(ValueError, match="unsupported messageDigestAlgorithm"):
+        turn_to_quads("c", 0, "user", doc, None, None, canonicalize=True,
+                      options={"messageDigestAlgorithm": "md2"})
+
+
 def test_jcs_empty_and_astral_keys_sort():
     """Found by the r6 tool-payload fuzz: _sort_key returned a bare []
     for the empty key (an `x and y` leftover), so a multi-key object

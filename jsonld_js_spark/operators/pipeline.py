@@ -216,13 +216,15 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
                        "message": "document nesting exceeds the "
                                   "processing depth limit"})
         return [], events
-    except NonFiniteNumberError as e:
-        # same resilience contract for document content that RFC 8785
-        # refuses: NaN/Infinity in an rdf:JSON literal (an over-range
-        # number Number-converts to Infinity; the reference's
-        # canonicalize throws identically) degrades to a per-document
-        # error row, not a task-kill-retry storm. Any other ValueError
-        # here is configuration (e.g. an unsupported
+    except (NonFiniteNumberError, UnicodeError) as e:
+        # same resilience contract for document content the kernel
+        # cannot encode: NaN/Infinity in an rdf:JSON literal (an
+        # over-range number Number-converts to Infinity; the
+        # reference's canonicalize throws identically), or a lone
+        # UTF-16 surrogate from a JSON escape in an rdf:JSON key (JCS
+        # sort) or a canonicalized literal (digest input), degrades to
+        # a per-document error row, not a task-kill-retry storm. Any
+        # other ValueError here is configuration (e.g. an unsupported
         # messageDigestAlgorithm) and must fail the job loudly.
         events.append({"code": "invalid JSON literal",
                        "level": "error", "message": str(e)})

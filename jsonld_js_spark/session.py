@@ -35,12 +35,19 @@ def build_session(app_name: str = "jsonld_js_spark", *, cores: int | None = None
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
-        # skips PySpark's per-task zip re-read on CPython < 3.12; the
-        # daemon starts before any task ships --py-files, so the
-        # workers' path must hold this package from the start
+        # skips PySpark's per-task zip re-read on CPython < 3.12
         .config("spark.python.daemon.module", "jsonld_js_spark.daemon")
-        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # the daemon starts before any task ships --py-files, so the
+    # workers' path must hold this package from the start. Prepend it
+    # to the workers' environment, which PySpark fills from every
+    # spark.executorEnv.* conf: a builder conf would replace a
+    # spark-submit --conf spark.executorEnv.PYTHONPATH instead.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join([_PACKAGE_ROOT, *paths])
+    return spark

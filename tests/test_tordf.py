@@ -125,13 +125,13 @@ def test_huge_numbers_from_text_degrade_like_reference():
     assert got == [] and codes == ["invalid JSON literal"]
 
 
-def test_only_nonfinite_json_literals_degrade_at_extraction():
-    """turn_to_quads turns RFC 8785's NaN/Infinity refusal (document
-    content, a NonFiniteNumberError) into an 'invalid JSON literal'
-    row (end to end: test_huge_numbers_from_text_degrade_like_reference);
-    any other ValueError is configuration and must propagate, e.g. an
-    unsupported messageDigestAlgorithm, which must not become a warning
-    row per document."""
+def test_config_value_errors_propagate_at_extraction():
+    """turn_to_quads turns content errors, such as RFC 8785's
+    NaN/Infinity refusal (a NonFiniteNumberError; end to end:
+    test_huge_numbers_from_text_degrade_like_reference), into an
+    'invalid JSON literal' row; any other ValueError is configuration
+    and must propagate, e.g. an unsupported messageDigestAlgorithm,
+    which must not become a warning row per document."""
     from jsonld_js_spark.kernel.jcs import NonFiniteNumberError
     from jsonld_js_spark.operators.pipeline import turn_to_quads
 
@@ -141,6 +141,24 @@ def test_only_nonfinite_json_literals_degrade_at_extraction():
     with pytest.raises(ValueError, match="unsupported messageDigestAlgorithm"):
         turn_to_quads("c", 0, "user", doc, None, None, canonicalize=True,
                       options={"messageDigestAlgorithm": "md2"})
+
+
+def test_unencodable_surrogates_degrade_at_extraction():
+    """A lone UTF-16 surrogate from a JSON escape ("\\ud800" parses to
+    a Python str no UTF codec encodes) is document content too: in an
+    rdf:JSON key it breaks the JCS sort, in a canonicalized blank-node
+    quad it breaks the digest. Both degrade to an 'invalid JSON
+    literal' row with no quads, never an exception out of the task."""
+    from jsonld_js_spark.operators.pipeline import turn_to_quads
+
+    tool = '{"args": {"\\ud800": "x", "a": "y"}, "name": "t"}'
+    quads, events = turn_to_quads("c", 0, "assistant", "hi", tool, None)
+    assert quads == [] and [e["code"] for e in events] == ["invalid JSON literal"]
+
+    doc = '{"@context": {"@vocab": "http://x#"}, "a": "\\ud800"}'
+    quads, events = turn_to_quads("c", 0, "user", doc, None, None,
+                                  canonicalize=True)
+    assert quads == [] and [e["code"] for e in events] == ["invalid JSON literal"]
 
 
 def test_jcs_empty_and_astral_keys_sort():

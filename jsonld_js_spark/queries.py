@@ -22,6 +22,7 @@ JSON-LD engine itself (kg_*), training-data ops (doc_*, emb_*, mm_*).
 
 from __future__ import annotations
 
+import functools
 import json
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,7 +30,19 @@ from pyspark.sql import functions as F
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """One table of the star schema. A ``read.parquet`` without a schema
+    runs a Spark job to read a footer, once per query; the schema is
+    read once per session and table version instead."""
+    path = f"{sf_dir}/{name}.parquet"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    version = (jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+               .getFileStatus(jpath).getModificationTime())
+    return spark.read.schema(_parquet_schema(spark, path, version)).parquet(path)
+
+
+@functools.lru_cache(maxsize=64)
+def _parquet_schema(spark: SparkSession, path: str, version: int):
+    return spark.read.parquet(path).schema
 
 
 def _cents(col):

@@ -104,6 +104,27 @@ def test_rows_only_queries_run(spark, name, fn):
     assert len(sdf.columns) > 0
 
 
+def test_load_reads_a_table_schema_once_per_version(spark, tmp_path):
+    """load() runs no footer-reading job for a table it already read,
+    and reads a rewritten table's schema again."""
+    from jsonld_js_spark.queries import load
+
+    sf_dir = str(tmp_path)
+    spark.range(3).write.parquet(f"{sf_dir}/t.parquet")
+    assert load(spark, sf_dir, "t").columns == ["id"]
+    sc = spark.sparkContext
+    sc.setJobGroup("load-cached-schema", "load-cached-schema")
+    try:
+        again = load(spark, sf_dir, "t")
+        assert sc.statusTracker().getJobIdsForGroup("load-cached-schema") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert again.count() == 3
+    (spark.range(3).selectExpr("id", "id * 2 AS twice")
+     .write.mode("overwrite").parquet(f"{sf_dir}/t.parquet"))
+    assert load(spark, sf_dir, "t").columns == ["id", "twice"]
+
+
 def test_kg_full_build_composite_gate(spark):
     """kg_full_build has no SQL oracle (its input is synthesized in
     Python), but it decomposes exactly: output rows == canonized

@@ -200,6 +200,13 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
             # namespace canonical labels per document (SURVEY §2.9)
             quads = relabel_quads(
                 quads, {old: f"c14n-{salt}-{new[4:]}" for old, new in id_map.items()})
+        if "\\u" in (text or "") or "\\u" in (tool or ""):
+            # a lone UTF-16 surrogate from a JSON escape ("\ud800")
+            # survives parsing and the kernel, but no UTF codec encodes
+            # it, so the Arrow stage would fail the task on an emitted
+            # value holding one. Only a \u escape can make one (strings
+            # from Arrow are valid UTF-8): other turns skip the check.
+            json.dumps(quads, ensure_ascii=False).encode("utf-8")
     except JsonLdError as e:
         events.append({"code": e.code or e.name, "level": "error",
                        "message": e.message})
@@ -222,10 +229,11 @@ def turn_to_quads(conv_id: str, turn_idx: int, role: str, text: str,
         # over-range number Number-converts to Infinity; the
         # reference's canonicalize throws identically), or a lone
         # UTF-16 surrogate from a JSON escape in an rdf:JSON key (JCS
-        # sort) or a canonicalized literal (digest input), degrades to
-        # a per-document error row, not a task-kill-retry storm. Any
-        # other ValueError here is configuration (e.g. an unsupported
-        # messageDigestAlgorithm) and must fail the job loudly.
+        # sort), a canonicalized literal (digest input) or any emitted
+        # value (the check above), degrades to a per-document error
+        # row, not a task-kill-retry storm. Any other ValueError here
+        # is configuration (e.g. an unsupported messageDigestAlgorithm)
+        # and must fail the job loudly.
         events.append({"code": "invalid JSON literal",
                        "level": "error", "message": str(e)})
         return [], events
@@ -243,17 +251,18 @@ def extract_triples(transcripts: DataFrame, *, canonicalize: bool = False,
     """
     import pandas as pd
 
-    spark = transcripts.sparkSession
-    base_options = dict(options or {})
+    # captured by ``run``, so it ships in the pickled command: PySpark
+    # broadcasts a command over 1 MB by itself, and a broadcast per
+    # call would cost a JVM round trip and a temp file on every plan
+    # build (turn_to_quads copies the dict, so tasks may share it)
+    opts = dict(options or {})
     if context_loader:
-        base_options["context_loader"] = context_loader
-    bc = spark.sparkContext.broadcast(base_options)
+        opts["context_loader"] = context_loader
 
     cols = ("conv_id", "turn_idx", "kind", "graph", "subj", "pred",
             "obj_kind", "obj_value", "obj_datatype", "obj_lang")
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        opts = bc.value
         for pdf in batches:
             # column-wise accumulation: building pandas from 10 flat
             # lists is ~5x cheaper than from a list of row tuples, and
@@ -299,8 +308,20 @@ _XSD = "http://www.w3.org/2001/XMLSchema#"
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 _RDF_JSON = "http://www.w3.org/1999/02/22-rdf-syntax-ns#JSON"
 
+# The hybrid's JVM branch is Spark SQL text: the JVM parses each piece
+# in one call. Column builders would cost one py4j round trip per node
+# (~2,400 per plan, 330-450 ms of driver time per build, measured by
+# scripts/probe_plan_build.py). Regexes sit in raw literals (r'...'),
+# so they read exactly as Java's regex engine sees them.
+
 # JVM twin of looks_like_jsonld(): shape check + Jackson parse probe
 _JSONLD_SHAPE = r'^\s*[\[{]'
+_IS_DOC_SQL = f"""text IS NOT NULL
+    AND (text RLIKE r'{_JSONLD_SHAPE}'
+         AND (contains(text, '@context') OR contains(text, '@id')
+              OR contains(text, '@graph') OR contains(text, '@type')
+              OR contains(text, '"@value"')))
+    AND get_json_object(text, '$') IS NOT NULL"""
 
 # JCS-safe flat tool payload: the textual layout
 # json.dumps({"name": ..., "args": {...}}, sort_keys=True) emits for a
@@ -308,8 +329,8 @@ _JSONLD_SHAPE = r'^\s*[\[{]'
 # serialize identically under JSON and RFC 8785 (printable ASCII minus
 # '"', '\\', '{', '}').  The grammar does not check the order or the
 # uniqueness of the args keys: unsorted and duplicate-key payloads
-# match it too, and _tool_fast_cols reproduces them (array_sort and
-# the exists-later filter).  For a payload matching this grammar the
+# match it too, and _TOOL_JCS_SQL reproduces them (array_sort and the
+# exists-later filter).  For a payload matching this grammar the
 # kernel's expand->toRDF output is exactly two extra triples beyond the
 # envelope — the invokes IRI and an rdf:JSON literal whose value is the
 # JCS of args — both reproducible in pure column algebra.  Anything
@@ -317,115 +338,101 @@ _JSONLD_SHAPE = r'^\s*[\[{]'
 # spacings, a missing member) still routes to the Python kernel, so
 # the fast path can never diverge: it only accepts inputs whose kernel
 # output it provably reproduces byte-for-byte (parity battery:
-# tests/test_hybrid.py).
+# tests/test_hybrid.py).  The routing gate is this ONE anchored rlike:
+# filter conditions get no common-subexpression elimination, so every
+# extra term would re-run its regexes per row per branch. The heavier
+# work (extraction, duplicate-key last-wins, JCS member sort) lives
+# only in the projection that emits the triples.  The grammar holds no
+# "'", so it embeds in a SQL raw literal as is.
 _TOOL_SAFE = r' !#-\[\]-z|~'
 _TOOL_SIMPLE_RE = (
     r'^\{"args": \{(("[%(c)s]*": "[%(c)s]*")(, "[%(c)s]*": "[%(c)s]*")*)?\}, '
     r'"name": "[A-Za-z0-9_.-]+"\}$' % {"c": _TOOL_SAFE})
+_TOOL_SIMPLE_SQL = f"tool RLIKE r'{_TOOL_SIMPLE_RE}'"
+_TOOL_OK_SQL = f"tool IS NOT NULL AND {_TOOL_SIMPLE_SQL}"
+_NEEDS_KERNEL_SQL = (f"({_IS_DOC_SQL})\n"
+                     f"OR (tool IS NOT NULL AND NOT ({_TOOL_SIMPLE_SQL}))")
+
+# Within the grammar the only '"' characters are the string delimiters,
+# so quote-delimited extraction is unambiguous: tokens followed by
+# ': "' are keys, tokens preceded by ': ' are values.
+_TOOL_ARGS_SQL = r"""regexp_extract(tool, r'^\{"args": (\{[^{}]*\}), "name"', 1)"""
+_TOOL_NAME_SQL = r"""regexp_extract(tool, r', "name": "([A-Za-z0-9_.-]+)"\}$', 1)"""
+# (k, v, i) of each args member, in payload order
+_TOOL_MEMBERS_SQL = f"""transform(
+    zip_with(regexp_extract_all({_TOOL_ARGS_SQL}, r'"([^"]*)": "', 1),
+             regexp_extract_all({_TOOL_ARGS_SQL}, r'": "([^"]*)"', 1),
+             (mk, mv) -> struct(mk AS k, mv AS v)),
+    (m, mi) -> struct(m.k AS k, m.v AS v, mi AS i))"""
+# json.loads keeps the LAST of duplicate keys and RFC 8785 sorts members
+# by UTF-16 code units: mirrored by the exists-later filter and
+# array_sort (binary order == code-unit order on the ASCII-only
+# grammar), so ANY rlike-accepted payload, unsorted and duplicate-key
+# ones included, is reproduced byte-for-byte
+_TOOL_JCS_SQL = f"""concat('{{', concat_ws(',', transform(
+    array_sort(filter({_TOOL_MEMBERS_SQL},
+                      p -> NOT exists({_TOOL_MEMBERS_SQL},
+                                      q -> q.k = p.k AND q.i > p.i))),
+    p -> concat('"', p.k, '":"', p.v, '"'))), '}}')"""
+
+_NULL_SQL = "CAST(NULL AS STRING)"
+_SUBJ_SQL = "concat('https://example.org/conv/', conv_id, '/turn/', turn_idx)"
+# python isoformat(): fractional part only when non-zero micros
+_TS_ISO_SQL = """CASE WHEN date_format(ts, 'SSSSSS') = '000000'
+    THEN date_format(ts, 'yyyy-MM-dd''T''HH:mm:ss')
+    ELSE concat(date_format(ts, 'yyyy-MM-dd''T''HH:mm:ss'), '.',
+                date_format(ts, 'SSSSSS')) END"""
+
+
+def _triple_sql(pred: str, kind: str, value: str, datatype: str | None,
+                guard: str | None = None) -> str:
+    """One envelope triple as a TRIPLE_SCHEMA struct; NULL (dropped by
+    array_compact) where ``guard`` is false."""
+    dt = f"'{datatype}'" if datatype else _NULL_SQL
+    row = (f"struct('' AS graph, {_SUBJ_SQL} AS subj, '{pred}' AS pred, "
+           f"'{kind}' AS obj_kind, {value} AS obj_value, "
+           f"{dt} AS obj_datatype, {_NULL_SQL} AS obj_lang)")
+    return f"CASE WHEN {guard} THEN {row} END" if guard else row
+
+
+_ENVELOPE_SQL = "explode(array_compact(array(\n{}))) AS r".format(",\n".join((
+    _triple_sql(_RDF_TYPE, "iri", f"'{V}Turn'", None),
+    _triple_sql(V + "conversation", "iri",
+                "concat('https://example.org/conv/', conv_id)", None),
+    _triple_sql(V + "role", "literal", "role", _XSD + "string",
+                guard="role IS NOT NULL"),
+    _triple_sql(V + "text", "literal", "coalesce(text, '')", _XSD + "string"),
+    _triple_sql(V + "turnIndex", "literal", "CAST(turn_idx AS STRING)",
+                _XSD + "integer"),
+    _triple_sql(V + "ts", "literal", _TS_ISO_SQL, _XSD + "dateTime",
+                guard="ts IS NOT NULL"),
+    # the tool fast path (routing guarantees any tool payload that
+    # reaches this branch satisfies _TOOL_SIMPLE_RE; the guard is kept
+    # so the operator is safe standalone)
+    _triple_sql(V + "invokes", "iri",
+                f"concat('https://example.org/tool/', {_TOOL_NAME_SQL})",
+                None, guard=_TOOL_OK_SQL),
+    _triple_sql(V + "toolArgs", "literal", _TOOL_JCS_SQL, _RDF_JSON,
+                guard=_TOOL_OK_SQL),
+)))
 
 
 def _tool_fast_cols():
-    """(simple?, name, jcs_of_args) for the JVM tool fast path.
-
-    ``simple`` is a SINGLE anchored rlike: it gates routing in the
-    hybrid filter, where conditions get no common-subexpression
-    elimination, so every extra term would re-run its regexes per row
-    per branch. The heavier work (extraction, duplicate-key last-wins,
-    JCS member sort) lives only in the projection that emits the
-    triples. Within the grammar the only '"' characters are the string
-    delimiters, so quote-delimited extraction is unambiguous: tokens
-    followed by ': "' are keys, tokens preceded by ': ' are values.
-    json.loads keeps the LAST of duplicate keys and RFC 8785 sorts
-    members by UTF-16 code units — mirrored here by the exists-later
-    filter and array_sort (binary order == code-unit order on the
-    ASCII-only grammar), so ANY rlike-accepted payload, unsorted and
-    duplicate-key ones included, is reproduced byte-for-byte (battery:
-    tests/test_hybrid.py)."""
-    tool = F.col("tool")
-    simple = tool.rlike(_TOOL_SIMPLE_RE)
-    args_str = F.regexp_extract(tool, r'^\{"args": (\{[^{}]*\}), "name"', 1)
-    keys = F.regexp_extract_all(args_str, F.lit('"([^"]*)": "'), F.lit(1))
-    vals = F.regexp_extract_all(args_str, F.lit('": "([^"]*)"'), F.lit(1))
-    tagged = F.zip_with(
-        keys, vals, lambda k, v: F.struct(k.alias("k"), v.alias("v")))
-    tagged = F.transform(
-        tagged, lambda p, i: F.struct(p["k"].alias("k"), p["v"].alias("v"),
-                                      i.alias("i")))
-    kept = F.filter(
-        tagged,
-        lambda p: ~F.exists(tagged,
-                            lambda q: (q["k"] == p["k"]) & (q["i"] > p["i"])))
-    name = F.regexp_extract(tool, r', "name": "([A-Za-z0-9_.-]+)"\}$', 1)
-    jcs = F.concat(
-        F.lit("{"),
-        F.concat_ws(",", F.transform(
-            F.array_sort(kept),
-            lambda p: F.concat(F.lit('"'), p["k"], F.lit('":"'), p["v"],
-                               F.lit('"')))),
-        F.lit("}"))
-    return simple, name, jcs
+    """(simple?, name, jcs_of_args) Columns of the JVM tool fast path."""
+    return (F.expr(_TOOL_SIMPLE_SQL), F.expr(_TOOL_NAME_SQL),
+            F.expr(_TOOL_JCS_SQL))
 
 
 def _is_doc_col():
-    shape = F.col("text").rlike(_JSONLD_SHAPE) & (
-        F.col("text").contains("@context") | F.col("text").contains("@id")
-        | F.col("text").contains("@graph") | F.col("text").contains("@type")
-        | F.col("text").contains('"@value"'))
-    parses = F.get_json_object("text", "$").isNotNull()
-    return F.col("text").isNotNull() & shape & parses
+    return F.expr(_IS_DOC_SQL)
 
 
 def _envelope_triples_jvm(plain: DataFrame) -> DataFrame:
     """Envelope triples for plain turns as pure column algebra — stays
     inside whole-stage codegen, no Python worker at all. Byte-parity
     with the kernel path is asserted in tests/test_pipeline.py."""
-    subj = F.concat(F.lit("https://example.org/conv/"), F.col("conv_id"),
-                    F.lit("/turn/"), F.col("turn_idx"))
-    conv_iri = F.concat(F.lit("https://example.org/conv/"), F.col("conv_id"))
-    # python isoformat(): fractional part only when non-zero micros
-    ts_short = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")
-    ts_micro = F.date_format("ts", "SSSSSS")
-    ts_iso = F.when(ts_micro == "000000", ts_short).otherwise(
-        F.concat(ts_short, F.lit("."), ts_micro))
-    null_s = F.lit(None).cast("string")
-
-    def t(pred, kind, value, dt):
-        return F.struct(
-            F.lit("").alias("graph"),
-            subj.alias("subj"),
-            F.lit(pred).alias("pred"),
-            F.lit(kind).alias("obj_kind"),
-            value.alias("obj_value"),
-            (F.lit(dt) if dt else null_s).alias("obj_datatype"),
-            null_s.alias("obj_lang"))
-
-    tool_simple, tool_name, tool_jcs = _tool_fast_cols()
-    tool_ok = F.col("tool").isNotNull() & tool_simple
-    rows = F.array(
-        t(_RDF_TYPE, "iri", F.lit(V + "Turn"), None),
-        t(V + "conversation", "iri", conv_iri, None),
-        F.when(F.col("role").isNotNull(),
-               t(V + "role", "literal", F.col("role"), _XSD + "string")),
-        t(V + "text", "literal", F.coalesce(F.col("text"), F.lit("")),
-          _XSD + "string"),
-        t(V + "turnIndex", "literal", F.col("turn_idx").cast("string"),
-          _XSD + "integer"),
-        F.when(F.col("ts").isNotNull(),
-               t(V + "ts", "literal", ts_iso, _XSD + "dateTime")),
-        # the tool fast path (routing guarantees any tool payload that
-        # reaches this branch satisfies _TOOL_SIMPLE_RE; the guard is
-        # kept so the operator is safe standalone)
-        F.when(tool_ok,
-               t(V + "invokes", "iri",
-                 F.concat(F.lit("https://example.org/tool/"), tool_name),
-                 None)),
-        F.when(tool_ok, t(V + "toolArgs", "literal", tool_jcs, _RDF_JSON)),
-    )
-    exploded = (plain.select("conv_id", "turn_idx",
-                             F.explode(F.array_compact(rows)).alias("r"))
-                .select("conv_id", "turn_idx",
-                        F.lit("triple").alias("kind"), "r.*"))
-    return exploded
+    return (plain.selectExpr("conv_id", "turn_idx", _ENVELOPE_SQL)
+            .selectExpr("conv_id", "turn_idx", "'triple' AS kind", "r.*"))
 
 
 def extract_triples_hybrid(transcripts: DataFrame, *,
@@ -437,8 +444,7 @@ def extract_triples_hybrid(transcripts: DataFrame, *,
     tool payloads outside the provable grammar cross into the Arrow
     kernel. Same output as ``extract_triples`` (parity-tested), but the
     common cases never leave whole-stage codegen."""
-    tool_simple, _, _ = _tool_fast_cols()
-    needs_kernel = _is_doc_col() | (F.col("tool").isNotNull() & ~tool_simple)
+    needs_kernel = F.expr(_NEEDS_KERNEL_SQL)
     plain = transcripts.filter(~needs_kernel)
     # NOT repartitioned before the Arrow stage: an interleaved pinned
     # A/B measured the extra exchange+stage barrier at 0.89x (the

@@ -268,3 +268,66 @@ def test_hybrid_plain_path_has_no_python_stage(spark):
     plan = _envelope_triples_jvm(tx)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
     assert "*(" in plan  # whole-stage-codegen stages print as *(N)
+
+
+def test_lone_surrogate_value_degrades_to_a_warning_row(spark):
+    """A JSON escape of a lone UTF-16 surrogate ("\\ud800") parses into
+    a str that no UTF codec encodes. Emitted as a literal value it used
+    to fail the pandas->Arrow conversion, and with it the job, on both
+    paths. The document now degrades to one 'invalid JSON literal'
+    row, and the other turns of its Arrow batch keep their triples."""
+    ts = datetime.datetime(2026, 1, 1, 12, 0, 7)
+    rows = [
+        ("c", 0, "user", "plain before", None, ts),
+        ("c", 1, "user", '{"@id": "http://x/a", "http://x/p": "\\ud800"}',
+         None, ts),
+        ("c", 2, "user", '{"@id": "http://x/b", "http://x/p": "ok \\u00e9"}',
+         None, ts),
+        ("c", 3, "user", '{"@id": "http://x/c", "http://x/p": "fine"}',
+         None, ts),
+        ("c", 4, "user", "plain after", None, ts),
+    ]
+    # one partition: the kernel turns share one Arrow batch
+    df = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, "
+              "tool string, ts timestamp").coalesce(1)
+    a = _collect(extract_triples(df))
+    b = _collect(extract_triples_hybrid(df))
+    assert a == b
+    warnings = [(r[1], r[7]) for r in a if r[2] == "warning"]
+    assert warnings == [(1, "invalid JSON literal")]
+    by_turn = {}
+    for r in a:
+        if r[2] == "triple":
+            by_turn.setdefault(r[1], []).append(r[7])
+    assert sorted(by_turn) == [0, 2, 3, 4]
+    assert by_turn[2] == ["ok é"] and by_turn[3] == ["fine"]
+
+
+def test_hybrid_plan_build_py4j_round_trips(spark):
+    """The JVM branch is Spark SQL text, parsed in one call per piece;
+    built node by node with Column builders it cost ~2,400 py4j round
+    trips per plan. Counts the gateway client's commands while the
+    plan is built (no timing involved)."""
+    import gc
+
+    tx = spark.createDataFrame(
+        [("c", 0, "user", "plain text", None, None)],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp")
+    extract_triples_hybrid(tx)  # first build: lazy imports, warm caches
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(1)
+        return send(*args, **kwargs)
+
+    gc.collect()  # pending py4j object releases are commands too
+    client.send_command = counting
+    try:
+        extract_triples_hybrid(tx)
+    finally:
+        del client.send_command
+    assert 0 < len(calls) <= 300, f"{len(calls)} py4j round trips"
